@@ -12,6 +12,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from wren_engine_spark.session import get_spark
 
+    # session.py's 48g default driver heap lets the test JVM grow past
+    # the memory of a 15 GB machine, where the kernel kills it mid-run
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
     s = get_spark("tests", shuffle_partitions=8)
     yield s
 

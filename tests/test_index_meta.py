@@ -210,6 +210,19 @@ class TestCachedReadMechanics:
         assert index_meta.local_dir("s3a://bucket/x") is None
         assert index_meta.local_dir(str(tmp_path / "missing")) is None
 
+    def test_fs_token_covers_single_files(self, tmp_path):
+        f = tmp_path / "t.parquet"
+        f.write_bytes(b"abc")
+        d = tmp_path / "dir"
+        d.mkdir()
+        (d / "part-0").write_bytes(b"x")
+        tok = index_meta.fs_token([str(f), str(d)])
+        assert tok == index_meta.fs_token([str(f), str(d)])
+        st = os.stat(f)
+        os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+        assert index_meta.fs_token([str(f), str(d)]) != tok
+        assert index_meta.fs_token([str(f), str(tmp_path / "missing")]) is None
+
     def test_non_local_paths_fall_through_uncached(self, spark):
         calls = []
 

@@ -1382,6 +1382,37 @@ class TestPointerJumpingCC:
         }
         assert fast == slow
 
+    def test_canonical_edges_same_labels_and_rounds(self, spark):
+        """On a distinct list of ordered pairs (src < dst), skipping the
+        symmetrize-and-dedup shuffle changes neither the labels nor the
+        number of rounds."""
+        import random as rnd
+
+        rng = rnd.Random(11)
+        pairs = sorted({
+            (min(a, b), max(a, b))
+            for a, b in ((rng.randrange(150), rng.randrange(150)) for _ in range(180))
+            if a != b
+        })
+        df = spark.createDataFrame(pairs, "id_a LONG, id_b LONG")
+        runs = {}
+        for canonical in (False, True):
+            labels = {
+                r.node: r.component
+                for r in dedup.connected_components(df, canonical_edges=canonical).collect()
+            }
+            runs[canonical] = (labels, dedup.connected_components.last_rounds)
+        assert runs[True] == runs[False]
+        assert len(runs[True][0]) == len({n for p in pairs for n in p})
+
+    def test_empty_graph_stops_after_one_round(self, spark):
+        """No edges -> no labels -> sum(comp) is None: the loop breaks on
+        the None check after round 1 (without it, round 2 would be
+        needed to see two equal sums)."""
+        edges = spark.createDataFrame([], "id_a LONG, id_b LONG")
+        assert dedup.connected_components(edges).collect() == []
+        assert dedup.connected_components.last_rounds == 1
+
 
 class TestWeightedSample:
     def test_rate_follows_weight_and_is_layout_invariant(self, spark, docs):

@@ -1,5 +1,8 @@
 """Serving-layer tests: query envelope, limit pushdown, validate,
-metadata, model substitution, dry-plan twin, function catalog."""
+metadata, model substitution, dry-plan twin, function catalog, and the
+result cache (freshness, bypasses, bounds, counters)."""
+
+import copy
 
 import pytest
 from pyspark.sql import functions as F
@@ -228,14 +231,274 @@ class TestDryPlanTwin:
 
 
 class TestCache:
-    def test_query_cache_roundtrip(self, spark, tmp_path):
-        svc = SemanticService(deploy(spark, SF_DIR), cache_dir=str(tmp_path))
+    def test_query_cache_roundtrip(self, spark):
+        svc = SemanticService(deploy(spark, SF_DIR))
         q = "SELECT custkey FROM customer_m ORDER BY custkey LIMIT 5"
-        first = svc.query(q, use_cache=True)
+        first = svc.query(q)
         assert "cached" not in first
-        second = svc.query(q, use_cache=True)
+        second = svc.query(q)
         assert second["cached"] is True
         assert sorted(map(tuple, second["data"])) == sorted(map(tuple, first["data"]))
+
+
+def _rc_manifest(rls: bool = False) -> dict:
+    """Two models over copied sf0.001 files; ``rls`` filters rc_nation
+    by the ``rk`` session property."""
+    nation = {
+        "name": "rc_nation",
+        "tableReference": "nation",
+        "primaryKey": "nationkey",
+        "columns": [
+            {"name": "nationkey", "type": "integer", "expression": "n_nationkey"},
+            {"name": "name", "type": "varchar", "expression": "n_name"},
+            {"name": "regionkey", "type": "integer", "expression": "n_regionkey"},
+        ],
+    }
+    if rls:
+        nation["rowLevelAccessControls"] = [
+            {"name": "by_region", "condition": "regionkey = @rk",
+             "requiredProperties": [{"name": "rk", "required": True}]}
+        ]
+    region = {
+        "name": "rc_region",
+        "tableReference": "region",
+        "primaryKey": "regionkey",
+        "columns": [
+            {"name": "regionkey", "type": "integer", "expression": "r_regionkey"},
+            {"name": "name", "type": "varchar", "expression": "r_name"},
+        ],
+    }
+    return {"catalog": "wren", "schema": "public", "models": [nation, region]}
+
+
+def _rc_service(spark, tmp_path, manifest=None, properties=None, sources=None):
+    """A service over private copies of the nation/region files."""
+    import shutil
+
+    from wren_engine_spark.engine import SemanticEngine
+    from wren_engine_spark.mdl.manifest import Manifest
+    from wren_engine_spark.sources.registry import SourceRegistry
+
+    for t in ("nation", "region"):
+        shutil.copy(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    sources = sources or SourceRegistry(spark).add_directory(str(tmp_path))
+    eng = SemanticEngine(spark, Manifest.from_dict(manifest or _rc_manifest()), sources)
+    return SemanticService(eng.deploy(properties or {}))
+
+
+def _with_job_ids(spark, fn):
+    """``fn()`` run under a fresh Spark job group in its own thread;
+    returns (result, ids of the jobs that group started)."""
+    import threading
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"rc-{uuid.uuid4().hex[:8]}"
+    out = []
+
+    def run():
+        sc.setJobGroup(group, "result cache test")
+        out.append(fn())
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join()
+    return out[0], list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_RC_Q = "SELECT nationkey, name FROM rc_nation ORDER BY nationkey LIMIT 7"
+
+
+class TestResultCache:
+    def test_hit_returns_same_rows_and_starts_no_job(self, spark, tmp_path):
+        svc = _rc_service(spark, tmp_path)
+        first, miss_jobs = _with_job_ids(spark, lambda: svc.query(_RC_Q))
+        second, hit_jobs = _with_job_ids(spark, lambda: svc.query(_RC_Q))
+        assert miss_jobs, "the miss must execute (the probe sees its jobs)"
+        assert hit_jobs == []
+        assert "cached" not in first and second["cached"] is True
+        assert second["data"] == first["data"] and len(first["data"]) == 7
+        assert second["columns"] == first["columns"]
+        assert second["dtypes"] == first["dtypes"]
+
+    def test_touched_source_file_misses(self, spark, tmp_path):
+        import os
+
+        svc = _rc_service(spark, tmp_path)
+        first = svc.query(_RC_Q)
+        assert svc.query(_RC_Q)["cached"] is True
+        src = tmp_path / "nation.parquet"
+        st = os.stat(src)
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 2_000_000_000))
+        after = svc.query(_RC_Q)
+        assert "cached" not in after
+        uncached = to_json(svc.engine.sql(_RC_Q))
+        assert after["data"] == uncached["data"] == first["data"]
+        assert svc.query(_RC_Q)["cached"] is True  # re-stored under the new token
+
+    def test_redeploy_with_new_rls_properties_misses(self, spark, tmp_path):
+        svc = _rc_service(spark, tmp_path, manifest=_rc_manifest(rls=True),
+                          properties={"rk": "1"})
+        q = "SELECT nationkey, regionkey FROM rc_nation ORDER BY nationkey"
+        one = svc.query(q)
+        assert svc.query(q)["cached"] is True
+        assert {r[1] for r in one["data"]} == {1}
+        svc.engine.deploy({"rk": "2"})
+        two = svc.query(q)
+        assert "cached" not in two
+        assert {r[1] for r in two["data"]} == {2}
+        assert two["data"] != one["data"]
+
+    @pytest.mark.parametrize("q", [
+        "SELECT nationkey, rand() AS r FROM rc_nation ORDER BY nationkey LIMIT 3",
+        "SELECT current_date() AS d, COUNT(*) AS n FROM rc_nation",
+    ])
+    def test_time_and_random_queries_never_cached(self, spark, tmp_path, q):
+        svc = _rc_service(spark, tmp_path)
+        for _ in range(3):
+            assert "cached" not in svc.query(q)
+        stats = svc.cache_stats()
+        assert (stats["bypasses"], stats["misses"], stats["entries"]) == (3, 0, 0)
+
+    def test_ref_sql_and_dataframe_models_never_cached(self, spark, tmp_path):
+        from wren_engine_spark.sources.registry import SourceRegistry
+
+        man = _rc_manifest()
+        man["models"].append({
+            "name": "rc_ref",
+            "refSql": "SELECT 1 AS k",
+            "columns": [{"name": "k", "type": "integer", "expression": "k"}],
+        })
+        frame = spark.createDataFrame([(1, "x")], "r_regionkey INT, r_name STRING")
+        sources = (SourceRegistry(spark).add_directory(str(tmp_path))
+                   .add_dataframe("region", frame))
+        for svc in (_rc_service(spark, tmp_path, manifest=man),
+                    _rc_service(spark, tmp_path, sources=sources)):
+            assert svc.engine.source_paths is None
+            for _ in range(2):
+                assert "cached" not in svc.query(_RC_Q)
+            assert svc.cache_stats()["bypasses"] == 2
+            assert svc.cache_stats()["entries"] == 0
+
+    def test_reads_around_the_models_never_cached(self, spark, tmp_path):
+        """A temp view or file path named next to the models is not
+        covered by the model tokens, so such a query is never stored; a
+        query that reads no data at all is."""
+        svc = _rc_service(spark, tmp_path)
+        spark.createDataFrame([(0, "a")], "k INT, tag STRING").createOrReplaceTempView("rc_side")
+        around = [
+            "SELECT n.nationkey, s.tag FROM rc_nation n JOIN rc_side s "
+            "ON n.nationkey = s.k ORDER BY n.nationkey",
+            f"SELECT COUNT(*) AS n FROM parquet.`{SF_DIR}/region.parquet`",
+        ]
+        for q in around + around:
+            assert "cached" not in svc.query(q)
+        svc.query("SELECT 1 AS one")
+        assert svc.query("SELECT 1 AS one")["cached"] is True
+        stats = svc.cache_stats()
+        assert (stats["bypasses"], stats["entries"]) == (4, 1)
+
+    def test_mutating_a_returned_envelope_does_not_change_the_next_hit(
+        self, spark, tmp_path
+    ):
+        svc = _rc_service(spark, tmp_path)
+        q = ("SELECT nationkey, array(nationkey, regionkey) AS a FROM rc_nation "
+             "ORDER BY nationkey LIMIT 3")
+        first = svc.query(q)
+        want = copy.deepcopy({**first, "cached": True})
+        first["data"][0][1].append(99)
+        first["data"].pop()
+        hit = svc.query(q)
+        assert hit == want
+        hit["data"][0][0] = -1
+        hit["data"][1][1].clear()
+        hit["columns"].append("zz")
+        hit["dtypes"]["zz"] = "int"
+        assert svc.query(q) == want
+
+    def test_over_budget_result_returned_but_not_stored(
+        self, spark, tmp_path, monkeypatch
+    ):
+        from wren_engine_spark import serving
+
+        monkeypatch.setattr(serving, "_RESULT_CACHE_CELLS", 10)
+        svc = _rc_service(spark, tmp_path)
+        big = svc.query(_RC_Q)  # 7 rows x 2 columns = 14 cells
+        assert len(big["data"]) == 7
+        assert svc.cache_stats()["entries"] == 0
+        assert "cached" not in svc.query(_RC_Q)
+        small = "SELECT nationkey FROM rc_nation ORDER BY nationkey LIMIT 4"
+        svc.query(small)
+        assert svc.query(small)["cached"] is True
+
+    def test_257th_entry_evicts_the_oldest(self):
+        from wren_engine_spark.serving import ResultCache
+
+        rc = ResultCache()
+        env = {"columns": ["n"], "data": [[0]], "dtypes": {"n": "int"}}
+        for i in range(257):
+            rc.put((1, f"q{i}", None, None), (), env)
+        assert rc.get((1, "q0", None, None), ()) is None
+        assert rc.get((1, "q1", None, None), ())["cached"] is True
+        assert rc.get((1, "q256", None, None), ())["cached"] is True
+        stats = rc.stats()
+        assert (stats["entries"], stats["evictions"], stats["cells"]) == (256, 1, 256)
+
+    def test_concurrent_gets_and_puts_keep_counts_consistent(self):
+        """16 threads (more than cores) hammer overlapping keys under a
+        short switch interval; a lost update would break the cell total
+        or the hit count."""
+        import sys
+        import threading
+
+        from wren_engine_spark.serving import ResultCache
+
+        rc = ResultCache()
+        seen_hits = [0] * 16
+
+        def work(t: int) -> None:
+            for i in range(400):
+                key = (1, f"q{(t * 7 + i) % 300}", None, None)
+                if rc.get(key, ()) is not None:
+                    seen_hits[t] += 1
+                else:
+                    rows = [[i]] * (1 + i % 5)
+                    rc.put(key, (), {"columns": ["n"], "data": rows, "dtypes": {"n": "int"}})
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work, args=(t,)) for t in range(16)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+            assert not any(th.is_alive() for th in threads)
+        finally:
+            sys.setswitchinterval(old)
+        stats = rc.stats()
+        assert stats["hits"] == sum(seen_hits)
+        assert stats["entries"] == len(rc._entries) <= 256
+        assert stats["cells"] == sum(e[3] for e in rc._entries.values())
+
+    def test_counters_through_one_scripted_sequence(self, spark, tmp_path, monkeypatch):
+        from wren_engine_spark import serving
+
+        monkeypatch.setattr(serving, "_RESULT_CACHE_ENTRIES", 2)
+        svc = _rc_service(spark, tmp_path)
+        q2 = "SELECT regionkey FROM rc_region ORDER BY regionkey"  # 5 x 1
+        q3 = "SELECT name FROM rc_region ORDER BY name LIMIT 2"  # 2 x 1
+        svc.query(_RC_Q)  # miss, stored (14 cells)
+        svc.query(_RC_Q)  # hit
+        svc.query("SELECT rand() AS r FROM rc_region")  # bypass
+        svc.query(_RC_Q, dry_run=True)  # not a served query: no counter
+        svc.query(q2)  # miss
+        svc.query(q3)  # miss; evicts _RC_Q (LRU, 2 entries)
+        svc.query(_RC_Q)  # miss again
+        assert svc.cache_stats() == {
+            "hits": 1, "misses": 4, "bypasses": 1, "evictions": 2,
+            "entries": 2, "cells": 2 + 14,
+        }
 
 
 class TestQueryTimeout:

@@ -56,6 +56,22 @@ class TestFileResolution:
         with pytest.raises(SourceError):
             SourceRegistry(spark).resolve("no_such_table_anywhere")
 
+    def test_local_path_per_reference_style(self, spark, tmp_path):
+        """The file a reference reads, for every style ``resolve``
+        accepts; None wherever there is no local file to token."""
+        f = tmp_path / "t.parquet"
+        f.write_bytes(b"x")
+        reg = SourceRegistry(spark).add_directory(str(tmp_path))
+        for ref in ("t", '"wren"."public"."t"', f"parquet:{f}", f"parquet:file://{f}",
+                    str(f)):
+            assert reg.local_path(ref) == str(f), ref
+        for ref in ("parquet:s3a://bucket/t.parquet", "s3a://bucket/t.parquet",
+                    "jdbc:derby:/tmp/db#t", "no_such_table_anywhere",
+                    f"parquet:{tmp_path}/missing.parquet"):
+            assert reg.local_path(ref) is None, ref
+        reg.add_dataframe("t", spark.range(1))
+        assert reg.local_path("t") is None
+
 
 @pytest.fixture(scope="module")
 def derby_db(spark, tmp_path_factory):

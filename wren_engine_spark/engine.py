@@ -139,8 +139,9 @@ def _convert_java_exception(e: Exception) -> Exception:
 
 # expressions whose value depends on wall-clock time or randomness: a
 # cached analyzed plan would freeze them (ComputeCurrentTime /
-# ReplaceCurrentLike bake literals into the memoized optimizedPlan), so
-# queries referencing any of these bypass the plan cache
+# ReplaceCurrentLike bake literals into the memoized optimizedPlan) and
+# a cached result would repeat one draw, so queries referencing any of
+# these bypass the plan cache and the serving layer's result cache
 _UNCACHEABLE_FNS = frozenset(
     {
         "current_date", "current_timestamp", "current_time", "now",
@@ -151,6 +152,14 @@ _UNCACHEABLE_FNS = frozenset(
         "monotonically_increasing_id", "unix_millis", "unix_seconds",
     }
 )
+
+
+def is_deterministic(idents: set[str]) -> bool:
+    """True when a query's identifier tokens name no time- or
+    randomness-dependent function — the one rule every cache of query
+    plans or results applies before storing."""
+    return _UNCACHEABLE_FNS.isdisjoint(idents)
+
 
 _TZ_OFFSET = re.compile(r"^[+-]\d{2}:\d{2}$")
 
@@ -314,6 +323,14 @@ class SemanticEngine:
 
         self._plan_cache: OrderedDict[tuple, DataFrame] = OrderedDict()
         self._plan_cache_max = 256
+        # bumped by every deploy() / refresh_cube(): a result computed
+        # under one generation never answers a request under another
+        self.generation = 0
+        # local file or directory behind each model's source, resolved
+        # at deploy; None when some model reads a source with no local
+        # path (ref_sql, JDBC, catalog table, registered DataFrame,
+        # object store) — nothing then proves a stored result fresh
+        self.source_paths: tuple[str, ...] | None = None
         check_cycles(manifest)
 
     # ------------------------------------------------------------------ deploy
@@ -345,7 +362,23 @@ class SemanticEngine:
             )
         for cube in self.manifest.cubes:
             self._register_cube(cube)
+        # last, so a request that started mid-deploy stores its result
+        # under the previous generation
+        self.source_paths = self._local_source_paths()
+        self.generation += 1
         return self
+
+    def _local_source_paths(self) -> tuple[str, ...] | None:
+        model_names = {m.name.lower() for m in self.manifest.models}
+        if any(c.base_object.lower() not in model_names for c in self.manifest.cubes):
+            return None
+        paths = []
+        for model in self.manifest.models:
+            p = None if model.ref_sql else self.sources.local_path(model.table_reference)
+            if p is None:
+                return None
+            paths.append(p)
+        return tuple(paths)
 
     def _views_in_dependency_order(self):
         """Register views so that a view referencing another view comes
@@ -447,7 +480,7 @@ class SemanticEngine:
         all_idents = identifiers_from_spans(spans)
         idents = None if star else all_idents
         # time-/randomness-dependent queries must re-plan every call
-        if not _UNCACHEABLE_FNS.isdisjoint(all_idents):
+        if not is_deterministic(all_idents):
             use_plan_cache = False
         # spark.sql() analyzes eagerly (Dataset.ofRows asserts analysis),
         # so once it returns, the plan is bound to the views as they were
@@ -1033,6 +1066,7 @@ class SemanticEngine:
         if old is not None:
             old.unpersist()
         self._register_cube(cube)
+        self.generation += 1
 
     # ------------------------------------------------------------- metadata
 

@@ -506,8 +506,11 @@ def connected_components(
     # ALL checkpoints lazy (r11; r10 kept edges eager): the edge plan,
     # sym, and the initial labels persist with truncated lineage as the
     # ROUND-1 convergence collect computes them — each is a single RDD
-    # node in that job's DAG, so the (possibly expensive) edge plan
-    # still runs exactly once even though sym references it twice.
+    # node in that job's DAG, so sym's two references to the edge plan
+    # share one computation within that job. A lazy checkpoint is not a
+    # durable copy, though: a lost block or a retried stage recomputes
+    # the edge plan, so it must be deterministic (same edges on every
+    # evaluation) for the labels to be consistent.
     # 2 pre-loop driver actions (r10) -> 0.
     one_way = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint(
         eager=False

@@ -28,50 +28,15 @@ id plays the token's role (see SCALING.md, index-lifecycle section).
 from __future__ import annotations
 
 import os
-import re
 from typing import Any, Callable
 
-_SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
+from wren_engine_spark.sources.fstoken import SCHEME_RE, fs_token, local_dir
 
 # (session_uid, *ident) -> (fs token, value)
 _CACHE: dict[tuple, tuple] = {}
 
 # (session_uid, database) -> locationUri (a catalog constant per db)
 _DB_LOC: dict[tuple, str] = {}
-
-
-def local_dir(path: str) -> str | None:
-    """``path`` as a listable local directory, or None when it carries
-    a non-local scheme. ``file:`` URIs are unwrapped (``file:/x``,
-    ``file:///x`` -> ``/x``); a missing directory returns None too —
-    the caller treats that as "cannot token, read uncached"."""
-    p = str(path)
-    if p.startswith("file:"):
-        p = p[len("file:"):]
-        if p.startswith("/"):
-            p = "/" + p.lstrip("/")
-    elif _SCHEME_RE.match(p) and "://" in p:
-        return None
-    return p if os.path.isdir(p) else None
-
-
-def fs_token(dirs: list[str]) -> tuple | None:
-    """Invalidation token for a set of local directories: every file's
-    (relpath, size, mtime_ns), sorted. None when any directory is
-    missing or unreadable — never guess staleness."""
-    out: list[tuple] = []
-    for d in dirs:
-        if not os.path.isdir(d):
-            return None
-        for dirpath, _dn, files in os.walk(d):
-            for f in files:
-                fp = os.path.join(dirpath, f)
-                try:
-                    st = os.stat(fp)
-                except OSError:
-                    return None
-                out.append((os.path.relpath(fp, d), st.st_size, st.st_mtime_ns))
-    return tuple(sorted(out))
 
 
 def _session_uid(spark) -> str:
@@ -164,7 +129,7 @@ def require_local_index_path(path: str, op: str) -> None:
         return
     # any other scheme prefix counts, single- or double-slash form
     # (Hadoop accepts hdfs:/nn/x too)
-    if _SCHEME_RE.match(p):
+    if SCHEME_RE.match(p):
         raise ValueError(
             f"{op}: index path {path!r} is not on a local filesystem; "
             "the epoch-staging/compaction rename protocol is only "

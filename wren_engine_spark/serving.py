@@ -4,7 +4,7 @@ Maps SURVEY.md §2.C onto plain Python methods (SemanticService) plus an
 optional FastAPI app factory (guarded import — fastapi is not in the
 base container). Endpoints → methods:
 
-  POST /v3/connector/{ds}/query (+dryRun/limit/cache) -> query()
+  POST /v3/connector/{ds}/query (+dryRun/limit)        -> query()
   POST /v3/connector/dry-plan                          -> dry_plan()
   POST /{ds}/validate/{rule}                           -> validate()
   GET  /{ds}/functions, /function/{name}               -> functions()/function()
@@ -15,21 +15,47 @@ Result JSON matches the reference formatter
 (ibis-server/app/util.py:122-147, 284-305): {columns, data, dtypes} with
 decimal→float (0-case kept), dates ``%Y-%m-%d``, timestamps
 ``%Y-%m-%d %H:%M:%S.%f``, binary→hex.
+
+Result cache (the reference's query cache, always on, in memory):
+``query()`` answers a repeated request from a stored envelope only when
+it can prove the envelope fresh.
+  - key: (deploy generation, sql, limit, timezone). Every ``deploy()``
+    (manifest, session/RLS properties) and ``refresh_cube()`` starts a
+    new generation.
+  - freshness: the ``sources.fstoken`` token (relpath, size, mtime_ns)
+    of every model's source file or directory, taken before the stored
+    query ran, must equal the token taken for the request.
+  - never cached: ``dry_run``; SQL naming a time or random function
+    (the plan cache's rule, ``engine.is_deterministic``); a query whose
+    analyzed plan reads anything besides the model source files (a
+    catalog table, file path or temp view named around the models);
+    and every request of a deployment in which some model reads a
+    source with no local path — ``ref_sql``, JDBC, catalog tables,
+    ``add_dataframe`` frames, object stores — or a cube sits on a
+    non-model base.
+  - bounds: an LRU of 256 entries and 1M cells (rows x columns) in
+    total; a larger result is returned but not stored.
+A miss stores the rows it returned (no second execution); a hit returns
+a private copy marked ``"cached": true`` and starts no Spark job.
 """
 
 from __future__ import annotations
 
+import copy
 import datetime
-import hashlib
 import os
 import re
+import threading
+from collections import OrderedDict
 from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame
 
-from wren_engine_spark.engine import SemanticEngine
+from wren_engine_spark.engine import SemanticEngine, is_deterministic
 from wren_engine_spark.functions.catalog import FunctionCatalog
+from wren_engine_spark.plans.sqltext import identifiers
+from wren_engine_spark.sources.fstoken import fs_token, local_path
 
 _LIMIT_TAIL = re.compile(r"\bLIMIT\s+(\d+)\s*;?\s*$", re.IGNORECASE)
 
@@ -118,24 +144,103 @@ def to_json(df: DataFrame, rows: list | None = None) -> dict:
     }
 
 
-class QueryCache:
-    """Opt-in parquet query cache keyed by (sql, properties) — reference
-    app/query_cache/__init__.py:11-48."""
+# result-cache bounds: as many entries as the engine's plan cache, and
+# at most this many cells (rows x columns) across all stored results; a
+# result larger than the whole budget is returned but never stored
+_RESULT_CACHE_ENTRIES = 256
+_RESULT_CACHE_CELLS = 1_000_000
 
-    def __init__(self, root: str):
-        self.root = root
 
-    def _path(self, key: str) -> str:
-        return os.path.join(self.root, hashlib.sha256(key.encode()).hexdigest())
+def _copy_envelope(env: dict, nested: bool) -> dict:
+    """A copy of a result envelope that shares nothing mutable with it
+    (array/map/struct cells are lists and dicts, so ``nested`` results
+    copy deeply)."""
+    data = copy.deepcopy(env["data"]) if nested else [list(r) for r in env["data"]]
+    return {"columns": list(env["columns"]), "data": data, "dtypes": dict(env["dtypes"])}
 
-    def get(self, spark, key: str) -> DataFrame | None:
-        p = self._path(key)
-        if os.path.exists(p):
-            return spark.read.parquet(p)
-        return None
 
-    def set(self, df: DataFrame, key: str) -> None:
-        df.write.mode("overwrite").parquet(self._path(key))
+def _reads_only(df: DataFrame, paths: tuple[str, ...]) -> bool:
+    """True when every leaf of ``df``'s analyzed plan is a file scan of
+    one of ``paths`` (the model sources) or a relation with no data
+    behind it (``SELECT 1``, ``range()``), so the token of ``paths``
+    covers everything the result was computed from. A catalog table, a
+    file path or temp view named around the models, or an in-memory
+    frame makes it False. A few py4j calls per leaf, on misses only."""
+    roots = {os.path.abspath(p) for p in paths}
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        name = leaf.nodeName()
+        if name in ("OneRowRelation", "Range"):
+            continue
+        if name != "LogicalRelation" or leaf.catalogTable().isDefined():
+            return False
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return False
+        scanned = rel.location().rootPaths()
+        for j in range(scanned.size()):
+            p = local_path(scanned.apply(j).toString())
+            if p is None or os.path.abspath(p) not in roots:
+                return False
+    return True
+
+
+class ResultCache:
+    """In-memory LRU of result envelopes — the reference's query cache
+    (app/query_cache/__init__.py:11-48) with proof of freshness: an
+    entry is keyed by (deploy generation, sql, limit, timezone) and
+    carries the filesystem token of every model source taken before its
+    query ran; it answers only a request whose fresh token is equal.
+    One lock guards the entries; concurrent misses on a key all
+    execute, and the last to finish is stored."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[tuple, tuple] = OrderedDict()
+        self._cells = 0
+        self._stats = dict.fromkeys(("hits", "misses", "bypasses", "evictions"), 0)
+
+    def count(self, what: str) -> None:
+        with self._lock:
+            self._stats[what] += 1
+
+    def get(self, key: tuple, token: tuple) -> dict | None:
+        with self._lock:
+            hit = self._entries.get(key)
+            if hit is not None and hit[0] != token:
+                self._drop(key)  # its sources changed since it was stored
+                hit = None
+            if hit is None:
+                return None
+            self._entries.move_to_end(key)
+            self._stats["hits"] += 1
+        _token, env, nested, _cells = hit
+        return {**_copy_envelope(env, nested), "cached": True}
+
+    def put(self, key: tuple, token: tuple, env: dict) -> None:
+        cells = len(env["data"]) * len(env["columns"])
+        if cells > _RESULT_CACHE_CELLS:
+            return
+        nested = any(
+            t.startswith(("array", "map", "struct")) for t in env["dtypes"].values()
+        )
+        entry = (token, _copy_envelope(env, nested), nested, cells)
+        with self._lock:
+            if key in self._entries:
+                self._drop(key)
+            self._entries[key] = entry
+            self._cells += cells
+            while len(self._entries) > _RESULT_CACHE_ENTRIES or self._cells > _RESULT_CACHE_CELLS:
+                self._drop(next(iter(self._entries)))
+                self._stats["evictions"] += 1
+
+    def _drop(self, key: tuple) -> None:
+        self._cells -= self._entries.pop(key)[3]
+
+    def stats(self) -> dict:
+        with self._lock:
+            return {**self._stats, "entries": len(self._entries), "cells": self._cells}
 
 
 class QueryTimeoutError(TimeoutError):
@@ -178,10 +283,10 @@ def collect_with_timeout(df: DataFrame, timeout_s: float | None) -> list:
 
 
 class SemanticService:
-    def __init__(self, engine: SemanticEngine, cache_dir: str | None = None):
+    def __init__(self, engine: SemanticEngine):
         self.engine = engine
         self.catalog = FunctionCatalog(engine.spark)
-        self.cache = QueryCache(cache_dir) if cache_dir else None
+        self.results = ResultCache()
 
     # ------------------------------------------------------------- query
 
@@ -190,7 +295,6 @@ class SemanticService:
         sql: str,
         limit: int | None = None,
         dry_run: bool = False,
-        use_cache: bool = False,
         timeout_s: float | None = None,
         timezone: str | None = None,
     ) -> dict | None:
@@ -199,15 +303,26 @@ class SemanticService:
         it (engine.sql stamps it at analysis) and TIMESTAMP (instant)
         result columns are rendered as that zone's wall clock — the
         formatter parity of ibis-server/app/util.py:149-190, whose
-        ``tz_convert`` + offset-free strftime does the same."""
+        ``tz_convert`` + offset-free strftime does the same.
+
+        A repeat of an earlier request is answered from the result
+        cache (see ``ResultCache``) when the deployment is the same and
+        no model source file has changed since; the hit carries
+        ``"cached": true`` and starts no Spark job."""
         if dry_run:
             self.engine.dry_run(sql)
             return None
-        key = f"{sql}|{limit}|{timezone}|{sorted(self.engine.properties.items())}"
-        if use_cache and self.cache:
-            hit = self.cache.get(self.engine.spark, key)
+        # generation first: a deploy() finishing after this read leaves
+        # the result under the old generation, where nothing reads it
+        key = (self.engine.generation, sql, limit, timezone)
+        paths = self.engine.source_paths
+        token = fs_token(paths) if paths is not None else None
+        if token is not None:
+            hit = self.results.get(key, token)
             if hit is not None:
-                return {**to_json(hit), "cached": True}
+                return hit
+        cacheable = token is not None and is_deterministic(identifiers(sql))
+
         def _finalize(df: DataFrame) -> DataFrame:
             if timezone is not None:
                 df = _render_timestamps_in_zone(df, timezone)
@@ -230,10 +345,19 @@ class SemanticService:
             df = self.engine.sql(sql)
             if limit is not None:
                 df = df.limit(limit)
+        cacheable = cacheable and _reads_only(df, paths)
+        self.results.count("misses" if cacheable else "bypasses")
         out = to_json(df, rows=collect_with_timeout(df, timeout_s))
-        if use_cache and self.cache:
-            self.cache.set(df, key)
+        if cacheable:
+            self.results.put(key, token, out)
         return out
+
+    def cache_stats(self) -> dict:
+        """Result-cache counters: hits, misses, bypasses (a query that
+        names a time/random function, or a deployment whose sources have
+        no local file token), evictions (LRU, by entry count or cell
+        budget), and the current entries and stored cells."""
+        return self.results.stats()
 
     def dry_plan(self, sql: str, dialect: str | None = None) -> str:
         return self.engine.dry_plan(sql, dialect=dialect)
@@ -246,7 +370,6 @@ class SemanticService:
         which calculated fields expand (and across which relationship
         paths), and the physical source behind each model."""
         from wren_engine_spark.mdl.lineage import extract_paths
-        from wren_engine_spark.plans.sqltext import identifiers
 
         idents = identifiers(sql)
         out: list[dict] = []
@@ -435,7 +558,6 @@ def create_app(service: SemanticService):
                 body["sql"],
                 limit=body.get("limit"),
                 dry_run=bool(body.get("dryRun")),
-                use_cache=bool(body.get("cacheEnable")),
                 timeout_s=body.get("timeoutSeconds"),
                 timezone=x_wren_timezone or body.get("timezone"),
             )

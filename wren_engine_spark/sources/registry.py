@@ -28,6 +28,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wren_engine_spark.sources.fstoken import local_path
+
 
 class SourceError(ValueError):
     pass
@@ -41,11 +43,13 @@ class DirectorySource:
         self.path = path
         self.fmt = fmt
 
-    def resolve(self, spark: SparkSession, name: str) -> DataFrame | None:
+    def file_of(self, name: str) -> str | None:
         p = os.path.join(self.path, f"{name}.{self.fmt}")
-        if os.path.exists(p):
-            return _read(spark, self.fmt, p)
-        return None
+        return p if os.path.exists(p) else None
+
+    def resolve(self, spark: SparkSession, name: str) -> DataFrame | None:
+        p = self.file_of(name)
+        return None if p is None else _read(spark, self.fmt, p)
 
 
 def _read(spark: SparkSession, fmt: str, path: str, **opts) -> DataFrame:
@@ -122,10 +126,33 @@ class SourceRegistry:
             return f"{_EXT_FMT[ext]}.`{ref}`"
         short = ref.split(".")[-1].strip('"`')
         for d in self._dirs:
-            p = os.path.join(d.path, f"{short}.{d.fmt}")
-            if os.path.exists(p):
+            p = d.file_of(short)
+            if p is not None:
                 return f"{d.fmt}.`{p}`"
         return ref
+
+    def local_path(self, table_reference: str) -> str | None:
+        """The local file or directory ``resolve`` reads for a table
+        reference, or None when it reads something with no local path:
+        JDBC, an ``add_dataframe`` frame, a catalog table, or a
+        non-local scheme (``s3a://`` ...). Result caches token this
+        path to prove a stored result is still fresh."""
+        ref = table_reference.strip()
+        scheme, _, rest = ref.partition(":")
+        if scheme.lower() == "jdbc" and rest:
+            return None
+        if scheme.lower() in _EXT_FMT.values() and rest:
+            return local_path(rest)
+        if os.path.splitext(ref)[1].lower() in _EXT_FMT:
+            return local_path(ref)
+        short = ref.split(".")[-1].strip('"`')
+        if short.lower() in self._tables:
+            return None
+        for d in self._dirs:
+            p = d.file_of(short)
+            if p is not None:
+                return local_path(p)
+        return None
 
     def resolve(self, table_reference: str) -> DataFrame:
         ref = table_reference.strip()
